@@ -2536,16 +2536,10 @@ object Dedup {
                               expectedItems: Long = 1000000L,
                               fpp: Double = 0.01, shards: Int = 1): Unit =
     seenLock(path).synchronized {
+      // the lock is reentrant: the append takes it again
       if (!seenFilterExists(df.sparkSession, path))
         buildSeenFilter(df, idCol, path, expectedItems, fpp, shards)
-      else {
-        val spark = df.sparkSession
-        val st = readSeenState(spark, path)
-        val batch = shardFilters(df, idCol, st.shards,
-          math.max(1L, st.items / st.shards), st.fpp)
-        st.filters.zip(batch).foreach { case (old, b) => old.mergeInPlace(b) }
-        commitSeenVersion(spark, path, st)
-      }
+      else appendToSeenFilter(df, idCol, path)
     }
 
   /** Merge two persisted seen filters into a NEW filter at `outPath`
@@ -2884,31 +2878,19 @@ object Dedup {
 
   private[graft] def readSeenState(spark: org.apache.spark.sql.SparkSession,
                             path: String): SeenFilterState = {
-    import org.apache.hadoop.fs.Path
-    val root = VersionedIndex.resolveRoot(spark, path)
-    if (root == path) {
+    val version = seenFilterVersion(spark, path)
+    if (version.isEmpty) {
       // distinguish "never built" from "pre-versioned single file" so
       // the user gets the right one-step fix, not a misleading
       // build-then-fail-again loop
-      val p = new Path(path)
+      val p = new org.apache.hadoop.fs.Path(path)
       val pfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       require(!(pfs.exists(p) && pfs.getFileStatus(p).isFile),
         s"seen-filter at $path uses the pre-versioned single-file " +
           "layout — delete it and rebuild with buildSeenFilter")
       require(false, s"no committed seen-filter at $path — buildSeenFilter first")
     }
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaIn = new java.io.DataInputStream(fs.open(new Path(root, "_meta")))
-    val (shards, items, fpp) =
-      try (metaIn.readInt(), metaIn.readLong(), metaIn.readDouble())
-      finally metaIn.close()
-    val filters = (0 until shards).map { s =>
-      val in = new java.io.DataInputStream(
-        fs.open(new Path(root, f"filter-$s%04d")))
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-      finally in.close()
-    }
-    SeenFilterState(root.stripPrefix(s"$path/"), shards, items, fpp, filters)
+    readSeenStateAt(spark, path, version.get)
   }
 
   /** Current committed seen-filter version name at `path`, None when

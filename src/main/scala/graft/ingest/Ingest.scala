@@ -94,8 +94,9 @@ final case class IngestConfig(
     // the commit marker (overwritten on crash-replay — deterministic
     // content, so replays are idempotent; marker-skipped replays never
     // rewrite it). Read back via [[Ingest.piiLedger]]. Cost when
-    // enabled: one extra aggregate pass over the projected batch (the
-    // count action); empty = zero overhead.
+    // enabled: the redaction projection plus one regex match count per
+    // PII type inside the commit's writes, summed by the commit's
+    // Observation (no extra pass); empty = zero overhead.
     redactPiiColumns: Seq[String] = Nil,
     // Near-dup suppression wired INTO the commit path (VERDICT r15 #7,
     // the q161/q209 wiring point): name a generated STRING column and
@@ -227,8 +228,11 @@ object Ingest {
       .select(col("value"), spark_partition_id().as("__pid"))
   }
 
-  private def rawBatch(spark: SparkSession, cfg: IngestConfig, numRows: Long): DataFrame =
-    spark.range(0, numRows, 1, cfg.parallelism)
+  /** The bounded raw index frame over rows `[from, until)`: the batch
+    * counterpart of [[rawStream]]. */
+  private def rawBatch(spark: SparkSession, cfg: IngestConfig,
+                       from: Long, until: Long): DataFrame =
+    spark.range(from, until, 1, cfg.parallelism)
       .select(col("id").as("value"), spark_partition_id().as("__pid"))
 
   /** Bucket-route then generate. Because every column is a pure
@@ -308,7 +312,7 @@ object Ingest {
   /** Bounded batch frame over `spark.range` — same generators, same
     * routing; used by tests and the bench's throughput probe. */
   def batchFrame(spark: SparkSession, cfg: IngestConfig, numRows: Long): DataFrame =
-    projected(rawBatch(spark, cfg, numRows), cfg)
+    projected(rawBatch(spark, cfg, 0, numRows), cfg)
 
   private def projected(indexed: DataFrame, cfg: IngestConfig): DataFrame = {
     val row = col("value")
@@ -375,51 +379,54 @@ object Ingest {
       else Some(CommitPhases.timed(CommitPhases.dedupNs) {
         suppressNearDupRows(cfg, path, token, batch, fs) })
     try {
-    // Batch size via observe metrics riding the staging write (r18):
-    // the standalone batch.count() re-ran the generator projection over
-    // the whole micro-batch — measured 0.7 s of the ~3.4 s commit path
-    // (ProbeIngest phase attribution), ~20% of commit wall for a number
-    // the write job computes anyway. With suppression on, the count is
-    // the suppressor's kept total (already computed in its accounting
-    // aggregate). With expectations on, the quarantine write consumes
-    // the same subtree first and fires the metric — same rows either
-    // way (deterministic frame, counted above the quarantine split).
-    val obsN = org.apache.spark.sql.Observation()
-    val working = dedupInfo.fold(
-      batch.observe(obsN, count(lit(1)).as("n")))(_.kept)
     // PII scrub FIRST (policy is absolute: quarantined rows persist
     // too, so they must be as redacted as published ones), then the
-    // expectations split on the scrubbed frame.
+    // expectations tag on the scrubbed frame.
+    val (scrubbed, piiAliases) = redact(
+      routeAndProject(dedupInfo.fold(batch)(_.kept), cfg), cfg)
+    val tagged =
+      if (cfg.expectations.isEmpty) scrubbed
+      else graft.api.Profiling.applyExpectations(scrubbed, cfg.expectations)
+    // The commit's whole accounting is ONE Observation above the
+    // quarantine split: the row count, the quarantined count and one
+    // match sum per redacted (column, PII type). The first write over
+    // this frame fulfils it — the quarantine write with expectations
+    // on, the staging write otherwise — so no action runs just to
+    // count. The per-row match-count columns drop right above it.
     //
-    // DETERMINISM INVARIANT (ADVICE r15): redactAndCount executes the
-    // batch once for the ledger counts, and the staged/quarantine
-    // writes execute it again — the `_pii` ledger matches the
-    // published bytes ONLY because the generator is deterministic per
-    // (token, row index): Gen's pools are pure functions of the row
-    // value and every replay of a token reproduces identical text.
-    // Caching the scrubbed micro-batch would buy nothing here and tax
-    // the hot commit path; any FUTURE nondeterministic source wired
-    // into this loop MUST persist the scrubbed frame across the
-    // count+write pair instead, or the ledger silently desynchronizes.
-    val (scrubbed, piiCounts) = redactAndCount(routeAndProject(working, cfg), cfg)
-    // Expectations split: tag the PROJECTED rows, land the violators
-    // in the quarantine (their own token dir, overwritten on replay)
-    // before anything publishes, and stage only the clean slice.
-    val (toStage, nQuarantined) =
-      if (cfg.expectations.isEmpty) (scrubbed, 0L)
+    // DETERMINISM INVARIANT (ADVICE r15): with expectations on, the
+    // quarantine write fulfils the Observation and the staging write
+    // executes the batch a second time — the counts and the `_pii`
+    // ledger match the staged bytes ONLY because the generator is
+    // deterministic per (token, row index): Gen's pools are pure
+    // functions of the row value and every replay of a token
+    // reproduces identical text. Any FUTURE nondeterministic source
+    // wired into this loop MUST persist the tagged frame across the
+    // two writes, or the accounting silently desynchronizes.
+    val obs = org.apache.spark.sql.Observation()
+    val observed = tagged.observe(obs, count(lit(1)).as("n"),
+      (if (cfg.expectations.isEmpty) Nil
+       else Seq(sum(when(col("quarantined"), 1L).otherwise(0L)).as("nq"))) ++
+        piiAliases.map { case (a, _) => sum(col(a)).as(a) }: _*)
+      .drop(piiAliases.map(_._1): _*)
+    // Expectations split: land the violators in the quarantine (their
+    // own token dir, overwritten on replay) before anything publishes,
+    // and stage only the clean slice.
+    val toStage =
+      if (cfg.expectations.isEmpty) observed
       else {
         val qp = cfg.quarantinePath.getOrElse(sys.error(
           "ingest expectations configured without quarantinePath"))
-        val tagged = graft.api.Profiling
-          .applyExpectations(scrubbed, cfg.expectations)
-        tagged.filter(col("quarantined"))
+        observed.filter(col("quarantined"))
           .withColumn("violations", array_join(col("violations"), ","))
           .drop("quarantined")
           .withColumn("batch_token", lit(token))
           .write.mode("overwrite").parquet(s"$qp/batch=$token")
-        val nq = spark.read.parquet(s"$qp/batch=$token").count()
-        (tagged.filter(!col("quarantined"))
-          .drop("violations", "quarantined"), nq)
+        // That write fulfilled the Observation, so the clean slice
+        // stages from the unobserved frame: its filter then pushes
+        // below the route exchange and the match counts prune away.
+        tagged.filter(!col("quarantined"))
+          .drop("violations" +: "quarantined" +: piiAliases.map(_._1): _*)
       }
     val staging = new Path(s"$path/_staging/$token")
     CommitPhases.timed(CommitPhases.stageNs) {
@@ -430,14 +437,23 @@ object Ingest {
         .partitionBy("year", "month")
         .save(staging.toString)
     }
-    // the observe metric is available once a write over the subtree has
-    // run (the staging write at the latest); an EMPTY micro-batch (a
-    // stream's warm-up trigger) can complete with no metrics row at all
-    // — that is genuinely 0 rows, not an error
-    val n = CommitPhases.timed(CommitPhases.countNs) {
-      dedupInfo.fold(
-        obsN.get.getOrElse("n", 0L).asInstanceOf[Long])(_.nKept) }
-    val nCommitted = n - nQuarantined
+    // The staging write has run, so the Observation is fulfilled. An
+    // EMPTY micro-batch (a stream's warm-up trigger) can complete with
+    // no metrics row, and a sum over no rows is null: both are 0 rows.
+    val metrics = CommitPhases.timed(CommitPhases.countNs)(obs.get)
+    def metric(k: String): Long = metrics.get(k) match {
+      case Some(v: Long) => v
+      case _ => 0L
+    }
+    val n = metric("n")
+    // the suppressor's `_dedup` ledger already recorded `kept`: a
+    // written row count that disagrees with it fails the commit before
+    // anything publishes, rather than commit inconsistent books
+    dedupInfo.foreach { d =>
+      if (n != d.nKept) throw new IllegalStateException(
+        s"commit $token counted $n rows but its _dedup ledger kept ${d.nKept}")
+    }
+    val nCommitted = n - metric("nq")
     CommitPhases.timed(CommitPhases.publishNs) {
     val stagingQualified = fs.makeQualified(staging).toString
     val stagedFiles = scala.collection.mutable.ArrayBuffer
@@ -477,12 +493,14 @@ object Ingest {
     // PII ledger entry BEFORE the marker (same ordering argument as
     // the seen filter: a crash between the two is repaired by the
     // replay overwriting the same deterministic content; a committed
-    // batch can never lack its redaction accounting)
+    // batch can never lack its redaction accounting). One line per
+    // type in PiiPatterns order, summed over the redacted columns.
     if (cfg.redactPiiColumns.nonEmpty) {
       val ledger = new Path(s"$path/_pii/$token")
       fs.mkdirs(ledger.getParent)
       val out = fs.create(ledger, true)
-      try out.write(piiCounts.map { case (t, c) => s"$t=$c" }
+      try out.write(graft.api.Curation.PiiPatterns.map { case (t, _, _) =>
+          s"$t=${piiAliases.collect { case (a, `t`) => metric(a) }.sum}" }
         .mkString("\n").getBytes("UTF-8"))
       finally out.close()
     }
@@ -567,7 +585,7 @@ object Ingest {
     * Bloom probe against the PINNED version of the fingerprint filter
     * for cross-batch suppression. One accounting aggregate per commit;
     * the kept frame re-derives deterministically for the downstream
-    * stage/publish executions (the redactAndCount determinism
+    * stage/publish executions (the commitBatch determinism
     * invariant, same argument).
     *
     * CONCURRENT COMMIT GROUPS (VERDICT r16 #7): the version consult,
@@ -596,9 +614,7 @@ object Ingest {
       : DedupDecision = {
     import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val colName = cfg.suppressNearDups.get
-    val spec = dataColumns(cfg).find(_.name == colName).getOrElse(sys.error(
-      s"suppressNearDups column '$colName' is not a generated data column"))
+    val spec = stringColumn(cfg, "suppressNearDups", cfg.suppressNearDups.get)
     val fpPath = s"$path/_neardup_filter"
     val fp = graft.functions.TextFunctions.minShingleHash(
       lower(Gen.expr(spec, cfg.seed, col("value"))), 3)
@@ -713,36 +729,24 @@ object Ingest {
   }
 
   /** The commit-path PII scrub (cfg.redactPiiColumns): redact each
-    * named column with [[graft.api.Curation.redactPii]], SUM the
-    * per-type match counts across the batch (one aggregate action),
-    * and drop the count columns so the staged schema is identical to
-    * the un-redacted path's. Returns (scrubbed frame, per-type totals
-    * in PiiPatterns order). */
-  private def redactAndCount(projected: DataFrame, cfg: IngestConfig)
-      : (DataFrame, Seq[(String, Long)]) = {
-    if (cfg.redactPiiColumns.isEmpty) return (projected, Nil)
+    * named column with [[graft.api.Curation.redactPii]], renaming its
+    * per-row `n_<type>` match counts to `__pii_<column>_<type>` so
+    * several columns can coexist. Returns (scrubbed frame, (count
+    * column, PII type) pairs); [[commitBatch]] sums the count columns
+    * in its Observation and drops them before anything is written. */
+  private def redact(projected: DataFrame, cfg: IngestConfig)
+      : (DataFrame, Seq[(String, String)]) = {
     val types = graft.api.Curation.PiiPatterns.map(_._1)
     var d = projected
-    val aliases = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    cfg.redactPiiColumns.foreach { c =>
+    val aliases = cfg.redactPiiColumns.flatMap { c =>
       d = graft.api.Curation.redactPii(d, c)
-      types.foreach { t =>
+      types.map { t =>
         val a = s"__pii_${c}_$t"
         d = d.withColumnRenamed(s"n_$t", a)
-        aliases += ((a, t))
+        (a, t)
       }
     }
-    // aliases is non-empty whenever redactPiiColumns is (every column
-    // contributes one alias per type), so head/tail is total
-    val aggCols = aliases.toSeq.map { case (a, _) => sum(col(a)).as(a) }
-    val sums = d.agg(aggCols.head, aggCols.tail: _*).head()
-    val totals = types.map { t =>
-      t -> aliases.filter(_._2 == t).map { case (a, _) =>
-        val i = sums.fieldIndex(a)
-        if (sums.isNullAt(i)) 0L else sums.getLong(i)
-      }.sum
-    }
-    (d.drop(aliases.map(_._1).toSeq: _*), totals)
+    (d, aliases)
   }
 
   /** The `_pii` redaction ledger of an ingest table: one row per
@@ -796,9 +800,12 @@ object Ingest {
     }
   }
 
-  /** Upfront validation of ingest expectations — a bad rule column or
-    * a missing quarantine path fails at startup, not mid-commit. */
-  private def validateExpectations(cfg: IngestConfig): Unit =
+  /** Upfront validation of the commit-path options, called by [[run]]
+    * and [[runBatchCommitted]] before any stream starts or batch
+    * publishes — a typo'd or mistyped column, a non-row-decidable rule
+    * or a missing quarantine path fails at startup, not mid-commit. */
+  private def validate(cfg: IngestConfig): Unit = {
+    cfg.seenFilterPath.foreach(_ => seenFilterSpec(cfg))
     if (cfg.expectations.nonEmpty) {
       require(cfg.quarantinePath.isDefined,
         "ingest expectations configured without quarantinePath")
@@ -817,43 +824,25 @@ object Ingest {
             s"(have: ${have.mkString(", ")})")
       }
     }
+    cfg.redactPiiColumns.foreach(stringColumn(cfg, "redactPii", _))
+    cfg.suppressNearDups.foreach(stringColumn(cfg, "suppressNearDups", _))
+  }
 
-  /** Upfront validation of the commit-path PII scrub — a typo'd or
-    * non-string column fails at startup, not mid-commit. */
-  private def validateRedactPii(cfg: IngestConfig): Unit =
-    if (cfg.redactPiiColumns.nonEmpty) {
-      import Gen.ColType._
-      val stringTypes: Set[Gen.ColType] = Set(StringName, StringDict,
-        StringIp, StringUuidPool, TimestampIso)
-      val byName = dataColumns(cfg).map(s => s.name -> s).toMap
-      cfg.redactPiiColumns.foreach { c =>
-        val spec = byName.getOrElse(c, sys.error(
-          s"redactPii column '$c' is not a generated data column " +
-            s"(have: ${byName.keys.mkString(", ")})"))
-        require(stringTypes.contains(spec.tpe),
-          s"redactPii column '$c' is not a string column (${spec.tpe})")
-      }
-    }
-
-  /** Upfront validation of the commit-path near-dup suppressor — a
-    * typo'd or non-string column fails at startup, not mid-commit. */
-  private def validateSuppressNearDups(cfg: IngestConfig): Unit =
-    cfg.suppressNearDups.foreach { c =>
-      import Gen.ColType._
-      val stringTypes: Set[Gen.ColType] = Set(StringName, StringDict,
-        StringIp, StringUuidPool, TimestampIso)
-      val byName = dataColumns(cfg).map(s => s.name -> s).toMap
-      val spec = byName.getOrElse(c, sys.error(
-        s"suppressNearDups column '$c' is not a generated data column " +
-          s"(have: ${byName.keys.mkString(", ")})"))
-      require(stringTypes.contains(spec.tpe),
-        s"suppressNearDups column '$c' is not a string column (${spec.tpe})")
-      // commitGroups > 1 is supported since r17 (VERDICT r16 #7): the
-      // consult→decide→ledger→append sequence runs as one per-filter-
-      // path critical section (suppressNearDupRows), so concurrent
-      // groups can never both pin the same filter version and each
-      // admit the same content — the r16 upfront rejection is gone.
-    }
+  /** The generated STRING data column `name` that the commit-path
+    * option `option` (redactPii, suppressNearDups) names; fails loudly
+    * on an unknown or non-string column. */
+  private def stringColumn(cfg: IngestConfig, option: String,
+                           name: String): Gen.ColSpec = {
+    import Gen.ColType._
+    val specs = dataColumns(cfg)
+    val spec = specs.find(_.name == name).getOrElse(sys.error(
+      s"$option column '$name' is not a generated data column " +
+        s"(have: ${specs.map(_.name).mkString(", ")})"))
+    require(Set[Gen.ColType](StringName, StringDict, StringIp, StringUuidPool,
+        TimestampIso).contains(spec.tpe),
+      s"$option column '$name' is not a string column (${spec.tpe})")
+    spec
+  }
 
   /** Resolve (and VALIDATE) the seen-filter id column against the
     * generated schema. Called upfront by [[run]]/[[runBatchCommitted]]
@@ -881,11 +870,7 @@ object Ingest {
 
   /** Run the streaming engine for `timeoutMs`, then report. */
   def run(spark: SparkSession, cfg: IngestConfig): IngestResult = {
-    // fail a bad seen-filter column or expectation BEFORE any stream starts
-    cfg.seenFilterPath.foreach(_ => seenFilterSpec(cfg))
-    validateExpectations(cfg)
-    validateRedactPii(cfg)
-    validateSuppressNearDups(cfg)
+    validate(cfg)
     // startup log parity (`Culvert.java:102,109`)
     System.err.println(s"Starting culvert: ${cfg.name}")
     (0 until cfg.parallelism).foreach(i => System.err.println(s"Starting stream: stream-$i"))
@@ -974,7 +959,7 @@ object Ingest {
     val path = cfg.outputPath.getOrElse(
       sys.error("batch ingest requires an output path"))
     val t0 = System.nanoTime()
-    routeAndProject(rawBatch(spark, cfg, numRows), cfg)
+    routeAndProject(rawBatch(spark, cfg, 0, numRows), cfg)
       .write.mode("append").format(cfg.format)
       .option("compression", cfg.compression)
       .options(orcWriteOptions(cfg))
@@ -1005,11 +990,7 @@ object Ingest {
     val path = cfg.outputPath.getOrElse(
       sys.error("batch ingest requires an output path"))
     require(batches > 0 && numRows >= 0)
-    // fail a bad seen-filter column or expectation before any batch publishes
-    cfg.seenFilterPath.foreach(_ => seenFilterSpec(cfg))
-    validateExpectations(cfg)
-    validateRedactPii(cfg)
-    validateSuppressNearDups(cfg)
+    validate(cfg)
     val t0 = System.nanoTime()
     val per = math.max(1L, numRows / batches)
     var committed = 0L
@@ -1018,9 +999,7 @@ object Ingest {
       val from = math.min(i * per, numRows)
       val until = if (i == batches - 1) numRows else math.min((i + 1) * per, numRows)
       if (until > from) {
-        val raw = spark.range(from, until, 1, cfg.parallelism)
-          .select(col("id").as("value"), spark_partition_id().as("__pid"))
-        committed += commitBatch(cfg, path, raw, i)
+        committed += commitBatch(cfg, path, rawBatch(spark, cfg, from, until), i)
         nCommits += 1
       }
     }

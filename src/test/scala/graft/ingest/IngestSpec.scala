@@ -435,6 +435,62 @@ class IngestSpec extends AnyFunSuite {
       .agg(sum("n_redacted")).head.getLong(0)
     assert(ipTotal == 2000L)
     assert(res.rowsCommitted + quar.count() == 2000L)
+    // an empty batch commits 0 rows and still lands an all-zero ledger
+    // entry before its marker
+    val empty = spark.range(0, 0, 1, 2)
+      .selectExpr("id as value", "cast(0 as int) as __pid")
+    assert(Ingest.commitBatch(cfg, dir, empty, batchId = 9) == 0)
+    assert(new java.io.File(dir, "_commits/9").exists)
+    val emptyEntry = Ingest.piiLedger(spark, dir)
+      .filter(col("batch_token") === "9").collect()
+    assert(emptyEntry.map(_.getString(1)).toSet ==
+      graft.api.Curation.PiiPatterns.map(_._1).toSet)
+    assert(emptyEntry.forall(_.getLong(2) == 0L), emptyEntry.mkString(", "))
+  }
+
+  test("a scrubbed, expectation-checked commit runs a fixed number of Spark jobs") {
+    import graft.api.Profiling.Check
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = tmp(); val q = tmp() + "/quarantine"
+    val cfg = IngestConfig(outputPath = Some(dir), parallelism = 2,
+      buckets = 2, redactPiiColumns = Seq("ip_address"),
+      expectations = Seq(Check.InSet("event_type", Seq("view", "click"))),
+      quarantinePath = Some(q))
+    def raw(from: Long) = spark.range(from, from + 1000, 1, 2)
+      .selectExpr("id as value", "cast(spark_partition_id() as int) as __pid")
+    // jobs carry the submitting thread's local properties: count only
+    // the ones tagged with this commit, then run a barrier job and wait
+    // for its start event (the listener bus delivers in order)
+    val key = "graft.test.commitJobs"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      Ingest.commitBatch(cfg, dir, raw(0), batchId = 0) // warm-up
+      sc.setLocalProperty(key, "commit")
+      val committed = Ingest.commitBatch(cfg, dir, raw(1000), batchId = 1)
+      sc.setLocalProperty(key, "barrier")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains("barrier") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains("barrier"), "listener never saw the barrier job")
+      assert(committed > 0)
+      val jobs = seen.toArray.count(_ == "commit")
+      // the route stage and the quarantine write, then the route stage
+      // and the staging write: the batch runs once per write, and no
+      // action runs only to count rows, quarantined rows or PII matches
+      assert(jobs == 4, s"jobs of one scrubbed, expectation-checked commit: $jobs")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("PII scrub validates upfront: unknown or non-string column fails fast") {
@@ -483,6 +539,33 @@ class IngestSpec extends AnyFunSuite {
     assert(replay.rowsCommitted == 0)
     assert(Ingest.dedupLedger(spark, dir).count() == 2)
     assert(graft.core.Tables.committedView(spark, dir).count() == 5)
+  }
+
+  test("near-dup suppression composes with expectations: committed = kept - quarantined") {
+    import graft.api.Profiling.Check
+    val dir = tmp(); val q = tmp() + "/quarantine"
+    val dict = Seq(
+      "the quick brown fox jumps over the lazy dog",
+      "pack my box with five dozen liquor jugs",
+      "how vexingly quick daft zebras jump today",
+      "sphinx of black quartz judge my vow now",
+      "the five boxing wizards jump quickly tonight")
+    val cfg = IngestConfig(outputPath = Some(dir), parallelism = 2,
+      buckets = 2,
+      columns = Some(Seq(
+        Gen.ColSpec("user_id", Gen.ColType.StringUuidPool),
+        Gen.ColSpec("text", Gen.ColType.StringDict, dict = dict))),
+      suppressNearDups = Some("text"),
+      expectations = Seq(Check.InSet("text", dict.take(3))),
+      quarantinePath = Some(q))
+    // batch 0 keeps one row per text (5), two of which violate the rule;
+    // batch 1 keeps nothing
+    val res = Ingest.runBatchCommitted(spark, cfg, 2000, batches = 2)
+    val kept = Ingest.dedupLedger(spark, dir).agg(sum("kept")).head.getLong(0)
+    val quarantined = spark.read.parquet(q).count()
+    assert(kept == 5L && quarantined == 2L, s"kept $kept, quarantined $quarantined")
+    assert(res.rowsCommitted == kept - quarantined)
+    assert(graft.core.Tables.committedView(spark, dir).count() == res.rowsCommitted)
   }
 
   test("near-dup suppression crash-replay reproduces the PINNED decision, no data loss") {
